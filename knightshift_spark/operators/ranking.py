@@ -10,8 +10,16 @@ Scale shape:
 - ``bm25_scores`` filters the exploded token stream to the query terms
   BEFORE any aggregation, so the per-term shuffle carries only matching
   tokens — a handful of terms out of a 100 TB stream.  Corpus statistics
-  (N, avgdl) are one tiny aggregate broadcast back; per-term document
-  frequencies are a second tiny aggregate (|query| rows).
+  (N, avgdl) are one tiny aggregate broadcast back.  Per-term document
+  frequencies are a window (``COUNT(*) OVER (PARTITION BY term)``) over
+  the aggregated (id, term) tf relation, so the tokenized corpus is
+  consumed once.  Hot-term caveat: the window has no map-side partial
+  aggregation, so each query term's matched (id, term) rows — narrow,
+  no text, but ``df(term)`` of them — land in ONE task.  A common word
+  over a 100 TB corpus makes that a single skewed, spill-prone task;
+  keep query terms selective, or derive df with a partial aggregate
+  (``tf.groupBy("term").count()`` over a checkpointed tf) when they
+  are not.
 - ``tfidf_topk`` is the heavy one: the full (doc, term) frequency table
   shuffles once on (doc, term) and once more for document frequencies.
   The df side stays bounded by vocabulary, not corpus, size; the final
@@ -92,11 +100,11 @@ def bm25_scores(
     # inputs (the operator's contract — every caller feeds a keyed
     # table), and the window consumes tf exactly once: 3 corpus passes
     # → 2 (A/B at the 10× point: 6.4–8.4 → 4.0–5.2 CPU-s, −35%, all
-    # 48 140 output rows identical). Scale note, stated: the window
-    # gathers each term's matched rows (narrow, post-aggregation — no
-    # text) into one partition, bounded by df(term); the passes it
-    # replaces re-tokenized the full corpus per branch, which dominates
-    # at any realistic df.
+    # 48 140 output rows identical). Scale note: the window gathers
+    # each term's matched rows (narrow, post-aggregation — no text)
+    # into ONE partition with no partial aggregation — df(term) rows,
+    # unbounded for a common word (the hot-term caveat in the module
+    # docstring).
     tf = tf.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("term")))
 
     idf = F.log(

@@ -22,7 +22,11 @@ Storage over Cloud Object Stores*, VLDB 2020 — public knowledge):
 - writers are optimistically concurrent: a commit that loses the race
   for its version number re-validates against the intervening commits
   and either rebases (disjoint key buckets) or raises
-  ``ConcurrentWriteError`` (overlap).
+  ``ConcurrentWriteError`` (overlap);
+- every copy-on-write statement (``merge``, ``delete_where``,
+  ``update_where``, ``delete_keys``) is a one-statement
+  ``transaction()``: it runs the same fused rewrite and declares its
+  whole READ set (every bucket it scanned) as its conflict set.
 
 Deletion vectors (r13, Delta's merge-on-read shape — Armbrust et al.
 §4.3 evolved into Delta's DV feature, public docs/protocol): tables
@@ -536,11 +540,12 @@ def _stats_overlap(st, lo, hi) -> bool:
 
 
 class _TxnState:
-    """Open multi-statement transaction: the snapshot it read, the
-    statements recorded so far (merges/delete_keys stage their inputs
-    eagerly — the caller's plan is evaluated exactly once — while the
-    rewrite itself is deferred), and the evolving schema. Committed as
-    ONE log entry by ``TxnTable.transaction``; ``version`` is filled in
+    """Open transaction: the snapshot it read, the statements recorded
+    so far (merges/delete_keys stage their inputs eagerly — the
+    caller's plan is evaluated exactly once — while the rewrite itself
+    is deferred), and the evolving schema. Committed as ONE log entry
+    by ``TxnTable._commit_txn`` — for ``transaction()`` and for every
+    standalone copy-on-write statement alike; ``version`` is filled in
     after the commit lands."""
 
     def __init__(self, meta: dict, active: dict[str, dict], read_v: int):
@@ -2222,17 +2227,16 @@ class TxnTable:
             bucketed = bucketed.repartition(F.col(_BUCKET))
         return self._write_bucket_dirs(self._zordered(bucketed, meta), meta)
 
-    def _stage_updates(self, df: DataFrame, meta: dict) -> tuple[str, list[int]]:
-        """Materialize the bucketed update batch ONCE under
-        ``_staging/<uuid>`` partitioned by bucket, and read the touched
-        buckets off the directory listing — no discovery job, and the
-        (possibly expensive) update plan is never evaluated twice. The
-        staged parquet is what the rewrite joins against; the caller
-        deletes it after the commit (vacuum sweeps crash leftovers).
-        Returns (relative staging dir, sorted touched buckets). The
-        bucket id is a stored column (NOT a partition directory): the
-        write needs no shuffle and no dir fan-out — an ``observe()``
-        metric riding the same job collects the distinct buckets."""
+    def _stage(self, bucketed: DataFrame) -> tuple[str, list[int]]:
+        """Materialize a bucketed statement input ONCE under
+        ``_staging/<uuid>`` and read the touched buckets off an
+        ``observe()`` metric riding the same write — no discovery job,
+        and the (possibly expensive) caller plan is never evaluated
+        twice. The bucket id is a stored column (NOT a partition
+        directory): the write needs no shuffle and no dir fan-out. The
+        dir is registered in-flight (process-local set + persisted
+        marker, so vacuum skips it) until the statement sweeps it.
+        Returns (relative staging dir, sorted touched buckets)."""
         from pyspark.sql import Observation
 
         rel = os.path.join(_STAGING_DIR, uuid.uuid4().hex)
@@ -2240,7 +2244,7 @@ class TxnTable:
         os.makedirs(os.path.join(self.path, _STAGING_DIR), exist_ok=True)
         obs = Observation()
         try:
-            self._bucketed(df, meta).observe(
+            bucketed.observe(
                 obs, F.collect_set(F.col(_BUCKET)).alias("touched")
             ).write.parquet(out)
         except BaseException:
@@ -2250,27 +2254,13 @@ class TxnTable:
         # dir while our pid lives, even past retention (r12) — underscore
         # prefix keeps parquet readers from treating it as data
         _write_inflight_marker(out)
+        _INFLIGHT_STAGING.add(out)
         return rel, sorted(int(b) for b in obs.get["touched"])
 
-    def _write_merged(
-        self, df: DataFrame, meta: dict, order_by: Sequence[str]
-    ) -> list[dict]:
-        """MERGE rewrite in ONE job with ONE shuffle: cluster on the
-        bucket, sort each bucket by (key, order_by DESC NULLS LAST,
-        __src DESC), keep the first row of every key run (``lag`` of the
-        key struct changes), and write ``partitionBy(bucket)`` straight
-        from the bucket-clustered partitions — the window's clustering
-        requirement IS the write layout, so Catalyst inserts no second
-        exchange (the generic ``operators.merge.upsert`` shuffles on the
-        key and would need a second bucket shuffle before the write).
-        Same semantics: updates (__src=1) beat stored rows on order_by
-        ties."""
-        merged = self._dedup_window(
-            df.repartition(int(meta["n_buckets"]), F.col(_BUCKET)),
-            meta,
-            order_by,
-        )
-        return self._write_bucket_dirs(self._zordered(merged, meta), meta)
+    def _stage_updates(self, df: DataFrame, meta: dict) -> tuple[str, list[int]]:
+        """Stage a merge batch: the CHECK-validated bucketed rows the
+        rewrite unions with the stored rows."""
+        return self._stage(self._bucketed(df, meta))
 
     @staticmethod
     def _dedup_window(df: DataFrame, meta: dict, order_by: Sequence[str]) -> DataFrame:
@@ -2774,13 +2764,13 @@ class TxnTable:
             },
         )
 
-    # -- multi-statement transactions ---------------------------------------
+    # -- statements and transactions ----------------------------------------
 
     @contextmanager
     def transaction(self):
-        """Group several MERGE / DELETE statements into ONE atomic commit
-        — the reference lands its whole cleaning batch (updates + the
-        validation deletes) under a single session commit
+        """Group several MERGE / DELETE / UPDATE statements into ONE
+        atomic commit — the reference lands its whole cleaning batch
+        (updates + the validation deletes) under a single session commit
         (``knightshift/cleaning/validate_tv_channel_games.py:189``), so a
         reader never sees the updates without the deletes.
 
@@ -2793,12 +2783,15 @@ class TxnTable:
 
         Statements inside the block are RECORDED, not committed: merges
         and delete_keys stage their inputs eagerly (the caller's plan is
-        evaluated exactly once, same as standalone), then the exit
-        composes every statement — in order — into ONE bucket-clustered
-        rewrite job over the union of touched buckets and publishes ONE
-        log entry (``op="txn"``). Cost shape: a merge+delete transaction
-        pays staging + one fused rewrite instead of two full rewrites —
-        the deleted rows are never written at all.
+        evaluated exactly once), then the exit composes every statement
+        — in order — into ONE bucket-clustered rewrite job over the
+        union of touched buckets and publishes ONE log entry
+        (``op="txn"``). This is the only copy-on-write path: a
+        standalone statement is a one-statement transaction, logged
+        under its own op (``merge``/``delete``/``update``). A
+        merge+delete transaction pays staging + one fused rewrite
+        instead of two full rewrites — the deleted rows are never
+        written at all.
 
         Semantics:
 
@@ -2807,14 +2800,14 @@ class TxnTable:
           block see the PRE-transaction state — the transaction is
           invisible until its single commit lands;
         - the commit's conflict set is the WHOLE read set: every bucket
-          any statement read (ALL buckets when a ``rewrite_all`` or
-          predicate delete scans the table), so a concurrent writer on
-          any bucket this transaction's outcome depended on raises
-          ``ConcurrentWriteError`` and the staged data rolls back;
-        - ``append``/``compact``/``restore``/``vacuum`` are not
-          statements (append inside an upsert batch is ``merge``;
-          maintenance ops take the whole table) and raise inside a
-          transaction;
+          any statement read (every active bucket when a predicate
+          statement scans the table, however few buckets it rewrites),
+          so a concurrent writer on any bucket this transaction's
+          outcome depended on raises ``ConcurrentWriteError`` and the
+          staged data rolls back;
+        - ``deletion_vectors=True`` raises inside the block (the fused
+          rewrite has no per-statement mask); ``append``/``compact``/
+          ``restore``/``vacuum`` are not statements and raise too;
         - schema evolution (``merge(evolve=True)``) applies to the
           transaction's later statements and rides the single commit.
 
@@ -2835,53 +2828,76 @@ class TxnTable:
         """
         if self._txn is not None:
             raise RuntimeError("nested transaction() is not supported")
-        meta, active, read_v = self._state()
-        st = _TxnState(meta, active, read_v)
+        st = _TxnState(*self._state())
         self._txn = st
         try:
             yield st
         except BaseException:
-            self._txn = None
-            for rel in st.staging:
-                _INFLIGHT_STAGING.discard(os.path.join(self.path, rel))
-                shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
+            self._drop_staging(st.staging)
             raise
-        self._txn = None
-        st.version = self._commit_txn(st)
+        finally:
+            self._txn = None
+        st.version = self._commit_txn(st, "txn")
 
-    def _record_merge(
+    def _drop_staging(self, rels: list[str]) -> None:
+        for rel in rels:
+            _INFLIGHT_STAGING.discard(os.path.join(self.path, rel))
+            shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
+
+    def _statement(
         self,
-        updates: DataFrame,
-        order_by: list[str],
-        evolve: bool,
-        txn: tuple[str, int] | None,
+        op: str,
+        deletion_vectors: bool | None,
+        record,
+        dv,
+        state: tuple | None = None,
     ) -> int:
-        st = self._txn
-        if evolve:
-            evolved = self._evolved_meta(updates, st.meta)
-            if evolved["schema"] != st.meta["schema"]:
-                st.meta = evolved
-                st.schema_changed = True
-        staging_rel, touched = self._stage_updates(updates, st.meta)
-        st.staging.append(staging_rel)
-        _INFLIGHT_STAGING.add(os.path.join(self.path, staging_rel))
-        if touched:
-            st.stmts.append(("merge", staging_rel, touched, order_by))
-        if txn is not None:
-            st.txn = txn
-        return st.read_v
+        """Run one mutating statement. Inside ``transaction()``,
+        ``record(st)`` appends it to the open transaction. Standalone,
+        ``dv(meta, active, read_v)`` runs the deletion-vector plan when
+        ``deletion_vectors`` (or, when None, the table default) asks for
+        it; otherwise ``record`` fills a fresh one-statement transaction
+        committed as ``op`` — exactly the code a transaction runs. That
+        state is never published as ``self._txn``: threads may share a
+        handle, and another thread's statement must not record into it.
+        ``state`` pins the OCC baseline to an earlier read."""
+        if self._txn is not None:
+            if deletion_vectors:
+                raise ValueError(
+                    "deletion_vectors=True is not a transaction "
+                    "statement option — transaction() fuses statements "
+                    "into one copy-on-write rewrite; run the DV "
+                    "statement standalone"
+                )
+            record(self._txn)
+            return self._txn.read_v
+        meta, active, read_v = state if state is not None else self._state()
+        use_dv = (
+            meta.get("dv_default") if deletion_vectors is None else deletion_vectors
+        )
+        if use_dv:
+            return dv(meta, active, read_v)
+        st = _TxnState(meta, active, read_v)
+        try:
+            record(st)
+        except BaseException:
+            self._drop_staging(st.staging)
+            raise
+        return self._commit_txn(st, op)
 
-    def _commit_txn(self, st: "_TxnState") -> int:
-        """Compose the recorded statements into one rewrite + one commit.
-        Plan: read the union of touched buckets once, then chain each
-        statement in order — merge = union staged + last-writer-wins
-        window (one shuffle per merge statement), delete = filter /
-        anti-join (no shuffle) — and write the surviving rows
-        ``partitionBy(bucket)`` in ONE job. With a ``rewrite_all``
-        delete, ``observe()`` metrics riding that same job collect which
-        buckets each predicate actually hit, and only hit-or-merged
-        buckets are committed (the single-pass ``delete_where`` rule,
-        fused)."""
+    def _commit_txn(self, st: "_TxnState", op: str) -> int:
+        """Compose the recorded statements into one rewrite + one commit
+        logged as ``op``. Plan: read the union of touched buckets once,
+        then chain each statement in order — merge = union staged +
+        last-writer-wins window (one shuffle per merge statement),
+        delete = filter / anti-join (no shuffle) — and write the
+        surviving rows ``partitionBy(bucket)`` in ONE job. With a
+        ``rewrite_all`` predicate statement, ``observe()`` metrics riding
+        that same job collect which buckets each predicate actually hit,
+        and only hit-or-merged buckets are committed. Without one, a
+        discovery job over the pre-transaction state finds the buckets
+        holding matching rows first. Statements that read no stored
+        rows and stage no batch commit nothing."""
         try:
             if not st.stmts:
                 return st.read_v
@@ -2929,14 +2945,15 @@ class TxnTable:
                 os.utime(os.path.join(self.path, rel))
             base_items = self._active_items(active, bucket_set)
             base_paths = [p for p, _ in base_items]
-            if base_items:
-                plan = self._read_entries(meta, base_items).withColumn(
+            # None = no stored rows in the read buckets: a merge then
+            # starts from its staged batches alone (no empty-base scan)
+            plan = (
+                self._read_entries(meta, base_items).withColumn(
                     _BUCKET, bucket_expr
                 )
-            else:
-                plan = self.spark.createDataFrame([], schema).withColumn(
-                    _BUCKET, bucket_expr
-                )
+                if base_items
+                else None
+            )
             staged_schema = StructType(
                 list(schema.fields) + [StructField(_BUCKET, LongType())]
             )
@@ -3000,15 +3017,14 @@ class TxnTable:
                 s = grp[0]
                 if s[0] == "merge":
                     order_by = s[3]
-                    upds = [
-                        self.spark.read.schema(staged_schema)
-                        .parquet(os.path.join(self.path, g[1]))
-                        .withColumn(_SRC, F.lit(i + 1))
-                        for i, g in enumerate(grp)
-                    ]
-                    both = plan.withColumn(_SRC, F.lit(0))
-                    for u in upds:
-                        both = both.unionByName(u)
+                    both = None if plan is None else plan.withColumn(_SRC, F.lit(0))
+                    for i, g in enumerate(grp):
+                        u = (
+                            self.spark.read.schema(staged_schema)
+                            .parquet(os.path.join(self.path, g[1]))
+                            .withColumn(_SRC, F.lit(i + 1))
+                        )
+                        both = u if both is None else both.unionByName(u)
                     both = both.repartition(n_buckets, F.col(_BUCKET))
                     if gi in flag_groups:
                         wk = Window.partitionBy(
@@ -3021,6 +3037,8 @@ class TxnTable:
                         )
                     plan = self._dedup_window(both, meta, order_by)
                     shuffled = True
+                elif plan is None:
+                    continue  # nothing stored or merged yet to delete/update
                 elif s[0] == "matched_delete":
                     _, cond = s
                     if "__matched" in plan.columns:
@@ -3034,19 +3052,11 @@ class TxnTable:
                             )
                         ).drop("__matched")
                 elif s[0] == "delete_keys":
-                    _, rel, _ = s
-                    key_schema = StructType(
-                        [schema[k] for k in keys]
-                        + [StructField(_BUCKET, LongType())]
+                    plan = plan.join(
+                        self._staged_keys(meta, s[1]), list(keys), "left_anti"
                     )
-                    kd = (
-                        self.spark.read.schema(key_schema)
-                        .parquet(os.path.join(self.path, rel))
-                        .drop(_BUCKET)
-                    )
-                    plan = plan.join(kd, list(keys), "left_anti")
-                elif s[0] == "update_where":
-                    _, cond, news, _ = s
+                else:  # delete_where / update_where
+                    cond = s[1]
                     if any_ra:
                         obs = Observation()
                         plan = plan.observe(
@@ -3059,22 +3069,12 @@ class TxnTable:
                             ).alias("hit"),
                         )
                         observations.append(obs)
-                    plan = self._apply_update(plan, cond, news, meta)
-                else:  # delete_where
-                    _, cond, _ = s
-                    if any_ra:
-                        obs = Observation()
-                        plan = plan.observe(
-                            obs,
-                            F.collect_set(
-                                F.when(
-                                    F.coalesce(cond, F.lit(False)),
-                                    F.col(_BUCKET),
-                                )
-                            ).alias("hit"),
-                        )
-                        observations.append(obs)
-                    plan = plan.filter(~F.coalesce(cond, F.lit(False)))
+                    if s[0] == "update_where":
+                        plan = self._apply_update(plan, cond, s[2], meta)
+                    else:
+                        plan = plan.filter(~F.coalesce(cond, F.lit(False)))
+            if plan is None:
+                return st.read_v
             if not shuffled and len(base_paths) > 32:
                 plan = plan.repartition(F.col(_BUCKET))
             plan = plan.drop("__matched")  # defensive: never a stored column
@@ -3117,7 +3117,7 @@ class TxnTable:
             else:
                 read_set = bucket_set
             return self._commit(
-                "txn",
+                op,
                 adds,
                 removes,
                 sorted(read_set),
@@ -3127,9 +3127,7 @@ class TxnTable:
                 extra={"rewritten": committed},
             )
         finally:
-            for rel in st.staging:
-                _INFLIGHT_STAGING.discard(os.path.join(self.path, rel))
-                shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
+            self._drop_staging(st.staging)
 
     def merge(
         self,
@@ -3146,16 +3144,15 @@ class TxnTable:
         — updates beat stored rows on ``order_by`` ties, the reference's
         unconditional UPDATE-on-key-hit). Only buckets containing update
         keys are read and rewritten; every other file carries forward
-        untouched in the commit.
+        untouched in the commit. The conflict set is those buckets.
 
         ``evolve=True`` appends the update's NEW columns to the table
         schema in the same commit (existing files read NULL for them);
         updates must still carry every existing column — evolution adds,
         it never silently drops.
 
-        Conditional clauses (r13, VERDICT r12 item 7 — one statement,
-        one staged plan, one commit where a transaction previously
-        needed two statements and two staged plans):
+        Conditional clauses (r13 — one statement, one staged plan, one
+        commit):
 
         - ``when_matched_delete=<cond>``: Delta's ``WHEN MATCHED AND
           cond THEN DELETE`` — among keys present in BOTH the table and
@@ -3166,209 +3163,97 @@ class TxnTable:
           would otherwise keep.) Unmatched table rows are never
           touched, even where ``cond`` would hold.
         - ``delete_where=<cond>``: a fused whole-table predicate
-          delete applied AFTER the merge — exactly equivalent to
+          delete applied AFTER the merge — exactly
           ``transaction(): merge(...); delete_where(cond,
-          rewrite_all=True)`` (pinned by test), with deleted rows
-          never written at all.
+          rewrite_all=True)``, with deleted rows never written at all
+          and the whole table as the conflict set.
 
-        Both clauses compose with the merge into the transaction
-        machinery's single fused rewrite (``op="txn"``). Inside an
-        explicit ``transaction()`` they record as statements in clause
-        order (matched-delete, then the predicate delete) right after
-        the merge — identical semantics to the standalone call, fused
-        with the block's other statements into the one commit.
+        A merge with a clause is logged as ``txn`` (it is that
+        multi-statement transaction); a plain merge as ``merge``.
 
-        Cost shape (r10): exactly TWO jobs per commit. Job 1 evaluates
-        the update plan ONCE, staging it bucket-partitioned under
-        ``_staging/`` — touched buckets come off the directory listing,
-        replacing the round-9 distinct-collect discovery job that
-        re-ran the whole update plan a second time inside the rewrite.
-        Job 2 reads (touched base files ∪ staged parquet) and rewrites
-        them with the single-shuffle bucket-aligned dedup of
-        ``_write_merged``. Footer stats are a driver-side pyarrow pass
-        over the files job 2 just wrote — no job.
-
-        Inside ``transaction()``, the merge stages its input (job 1)
-        immediately but defers the rewrite to the transaction's single
-        fused commit.
+        Cost shape (r10): exactly TWO jobs. Job 1 evaluates the update
+        plan ONCE, staging it bucket-partitioned under ``_staging/`` —
+        touched buckets ride an ``observe()`` on the same write. Job 2
+        reads (touched base files ∪ staged parquet) and rewrites them
+        with a single-shuffle bucket-aligned last-writer-wins window
+        (``transaction()``'s fused rewrite). Footer stats are a
+        driver-side pyarrow pass over the files job 2 just wrote — no
+        job. Inside ``transaction()`` job 1 runs immediately and the
+        rewrite joins the block's single fused commit; an empty batch
+        commits nothing.
 
         ``deletion_vectors=True`` (or the table default; explicit
         ``False`` overrides) runs the merge MERGE-ON-READ
         (``_mor_merge``): stored rows that lose the last-writer-wins
         rank are position-MASKED in place and the winning batch rows
         land as new files — identical final state, bytes written ∝
-        batch size instead of touched-bucket payload. Conditional
-        clauses COMPOSE with deletion vectors (r14): the matched-delete
-        and predicate-delete positions land in the same position-mask
-        commit (``when_matched_delete`` reuses the rank shuffle for its
-        matched flag; ``delete_where`` adds one candidate scan over the
-        untouched buckets and widens the conflict set to the whole
-        table, like its CoW twin). Explicit-transaction statements keep
-        the copy-on-write rewrite (``deletion_vectors=True`` inside
-        ``transaction()`` raises); a batch that wholly loses the rank
+        batch size instead of touched-bucket payload. Both clauses
+        compose with deletion vectors (r14): their positions land in
+        the same mask commit. A batch that wholly loses the rank
         commits nothing on the DV path (unless a txn stamp or a
         delete_where match must land)."""
-        if when_matched_delete is not None or delete_where is not None:
-            if self._txn is not None:
-                if deletion_vectors:
-                    raise ValueError(
-                        "deletion_vectors=True is not a transaction "
-                        "statement option — transaction() fuses "
-                        "statements into one copy-on-write rewrite; run "
-                        "the DV clause merge standalone"
-                    )
-                # inside an explicit transaction the clauses record as
-                # ordered statements (r13 follow-up — they used to
-                # raise); _commit_txn fuses them with everything else
-                st = self._txn
-                n0 = len(st.stmts)
-                self._record_merge(updates, list(order_by), evolve, txn)
-                # an empty update batch records no merge stmt — its
-                # matched_delete is vacuous and MUST not be appended
-                # (it would bind to an unrelated earlier merge)
-                if when_matched_delete is not None and len(st.stmts) > n0:
+        order_by = list(order_by)
+        clauses = when_matched_delete is not None or delete_where is not None
+
+        def record(st: _TxnState) -> None:
+            if evolve:
+                evolved = self._evolved_meta(updates, st.meta)
+                if evolved["schema"] != st.meta["schema"]:
+                    st.meta = evolved
+                    st.schema_changed = True
+            staging_rel, touched = self._stage_updates(updates, st.meta)
+            st.staging.append(staging_rel)
+            if txn is not None:
+                st.txn = txn
+            if touched:
+                st.stmts.append(("merge", staging_rel, touched, order_by))
+                # only a recorded merge binds its matched-delete (an
+                # empty batch's clause is vacuous and must not bind to
+                # an earlier merge)
+                if when_matched_delete is not None:
                     st.stmts.append(("matched_delete", when_matched_delete))
-                if delete_where is not None:
-                    st.stmts.append(("delete_where", delete_where, True))
-                return st.read_v
-            meta, active, read_v = (
-                _state_hint if _state_hint is not None else self._state()
-            )
-            use_dv = (
-                deletion_vectors
-                if deletion_vectors is not None
-                else bool(meta.get("dv_default"))
-            )
-            if use_dv:
-                # r14: clauses compose with deletion vectors — the
-                # matched-delete / predicate-delete positions are just
-                # more rows in the DV mask the MOR merge already writes
-                new_schema = None
-                if evolve:
-                    evolved = self._evolved_meta(updates, meta)
-                    if evolved["schema"] != meta["schema"]:
-                        new_schema = evolved["schema"]
-                        meta = evolved
-                staging_rel, touched = self._stage_updates(updates, meta)
-                staging_abs = os.path.join(self.path, staging_rel)
-                _INFLIGHT_STAGING.add(staging_abs)
-                os.utime(staging_abs)
-                try:
-                    if not touched and delete_where is None:
-                        return read_v
-                    return self._mor_merge(
-                        meta,
-                        active,
-                        read_v,
-                        staging_rel,
-                        touched,
-                        list(order_by),
-                        new_schema,
-                        txn,
-                        when_matched_delete=when_matched_delete,
-                        delete_where=delete_where,
-                    )
-                finally:
-                    _INFLIGHT_STAGING.discard(staging_abs)
-                    shutil.rmtree(staging_abs, ignore_errors=True)
-            st = _TxnState(meta, active, read_v)
-            self._txn = st
+            if delete_where is not None:
+                st.stmts.append(("delete_where", delete_where, True))
+
+        def dv(meta: dict, active: dict, read_v: int) -> int:
+            new_schema = None
+            if evolve:
+                evolved = self._evolved_meta(updates, meta)
+                if evolved["schema"] != meta["schema"]:
+                    new_schema = evolved["schema"]
+                    meta = evolved
+            staging_rel, touched = self._stage_updates(updates, meta)
             try:
-                self._record_merge(updates, list(order_by), evolve, txn)
-                if when_matched_delete is not None and st.stmts:
-                    st.stmts.append(("matched_delete", when_matched_delete))
-                if delete_where is not None:
-                    st.stmts.append(("delete_where", delete_where, True))
-            except BaseException:
-                self._txn = None
-                for rel in st.staging:
-                    _INFLIGHT_STAGING.discard(os.path.join(self.path, rel))
-                    shutil.rmtree(
-                        os.path.join(self.path, rel), ignore_errors=True
-                    )
-                raise
-            self._txn = None
-            return self._commit_txn(st)
-        if self._txn is not None:
-            if deletion_vectors:
-                raise ValueError(
-                    "deletion_vectors=True is not a transaction "
-                    "statement option — transaction() fuses statements "
-                    "into one copy-on-write rewrite; run the DV "
-                    "statement standalone"
-                )
-            return self._record_merge(updates, list(order_by), evolve, txn)
-        # _state_hint (internal): a caller whose UPDATE PLAN was built
-        # against an earlier state (update_from joins the snapshot it
-        # read) pins the OCC baseline to THAT read — otherwise a commit
-        # landing between the caller's read and this one would sit
-        # inside the conflict window unseen and its rows would be
-        # silently overwritten by stale post-images (review)
-        meta, active, read_v = (
-            _state_hint if _state_hint is not None else self._state()
-        )
-        use_dv = (
-            deletion_vectors
-            if deletion_vectors is not None
-            else bool(meta.get("dv_default"))
-        )
-        new_schema = None
-        if evolve:
-            evolved = self._evolved_meta(updates, meta)
-            if evolved["schema"] != meta["schema"]:
-                new_schema = evolved["schema"]
-                meta = evolved
-        keys = meta["keys"]
-        schema = self._schema(meta)
-        staging_rel, touched = self._stage_updates(updates, meta)
-        staging_abs = os.path.join(self.path, staging_rel)
-        _INFLIGHT_STAGING.add(staging_abs)
-        os.utime(staging_abs)  # rewrite begins reading: freshen for vacuum
-        try:
-            if not touched:
-                return read_v
-            if use_dv:
+                if not touched and delete_where is None:
+                    return read_v
                 return self._mor_merge(
                     meta,
                     active,
                     read_v,
                     staging_rel,
                     touched,
-                    list(order_by),
+                    order_by,
                     new_schema,
                     txn,
+                    when_matched_delete=when_matched_delete,
+                    delete_where=delete_where,
                 )
-            bucket_expr = F.pmod(
-                F.xxhash64(*keys), F.lit(meta["n_buckets"])
-            ).cast("long")
-            staged_schema = StructType(
-                list(schema.fields) + [StructField(_BUCKET, LongType())]
-            )
-            upd = (
-                self.spark.read.schema(staged_schema)
-                .parquet(os.path.join(self.path, staging_rel))
-                .withColumn(_SRC, F.lit(1))
-            )  # _BUCKET is a stored column in the staged files
-            base_items = self._active_items(active, set(touched))
-            if base_items:
-                base = (
-                    self._read_entries(meta, base_items)
-                    .withColumn(_BUCKET, bucket_expr)
-                    .withColumn(_SRC, F.lit(0))
-                )
-                both = base.unionByName(upd)
-            else:
-                both = upd
-            adds = self._write_merged(both, meta, list(order_by))
-            removes = [
-                p for p, a in active.items() if a["bucket"] in set(touched)
-            ]
-            return self._commit(
-                "merge", adds, removes, touched, read_v, schema=new_schema, txn=txn
-            )
-        finally:
-            _INFLIGHT_STAGING.discard(staging_abs)
-            shutil.rmtree(staging_abs, ignore_errors=True)
+            finally:
+                self._drop_staging([staging_rel])
+
+        # _state_hint (internal): a caller whose UPDATE PLAN was built
+        # against an earlier state (update_from joins the snapshot it
+        # read) pins the OCC baseline to THAT read — otherwise a commit
+        # landing between the caller's read and this one would sit
+        # inside the conflict window unseen and its rows would be
+        # silently overwritten by stale post-images (review)
+        return self._statement(
+            "txn" if clauses else "merge",
+            deletion_vectors,
+            record,
+            dv,
+            state=_state_hint,
+        )
 
     def _no_txn(self, op: str) -> None:
         if self._txn is not None:
@@ -3538,12 +3423,13 @@ class TxnTable:
         are position-masked). Readers apply the mask in
         ``_read_entries``; merge/compact/rebucket rewrites materialize
         and drop it; ``row_changes``/``table_changes`` diff DV commits
-        exactly (mode="dv" branches). Conflict semantics are a normal
-        delete/update: the commit lists the touched entries' buckets,
-        so any concurrent rewrite of those buckets wins or loses the
-        ordinary OCC race — a lost race rolls back only the NEW
-        position/data dirs (``rollback_dirs``), never the live entries
-        this commit re-references.
+        exactly (mode="dv" branches). The conflict set is the touched
+        buckets, widened for a predicate to its read set (every
+        candidate bucket the scan read); a key list keeps the buckets
+        where its keys matched. Any concurrent commit on them wins or
+        loses the ordinary OCC race — a lost race rolls back only the
+        NEW position/data dirs (``rollback_dirs``), never the live
+        entries this commit re-references.
 
         Matching is either predicate (``cond``) or key-list (``semi``,
         a deduplicated key DataFrame LEFT SEMI joined on the table key
@@ -3609,6 +3495,12 @@ class TxnTable:
                 )
                 adds.extend(new_adds)
                 touched.update(int(a["bucket"]) for a in new_adds)
+            if buckets is None:
+                # a predicate's conflict set is its READ set: every
+                # candidate bucket the scan read, not only the masked
+                # ones — a racer adding a matching row to a scanned
+                # bucket must conflict, never be rebased past
+                touched |= {int(a["bucket"]) for a in cands.values()}
             return self._commit(
                 op,
                 adds,
@@ -3843,6 +3735,10 @@ class TxnTable:
     ) -> int:
         """Conditional DELETE (reference OP-07): buckets holding matching
         rows are rewritten without them; untouched buckets carry over.
+        The predicate reads the whole table, so the conflict set is
+        every active bucket — a concurrent commit anywhere in the table
+        conflicts, including one that adds a matching row to a bucket
+        this delete does not rewrite.
 
         Two plans (writes cost ~3× reads, so with touched-bucket
         fraction r the crossover is r ≈ 0.75):
@@ -3869,14 +3765,16 @@ class TxnTable:
         rows are known to lie in, pruning-only, never a correctness
         input — and the candidate-bucket fraction decides (≥ 0.75 →
         single-pass). Without a hint, auto is the scale-safe two-phase
-        plan.
+        plan. Both plans are ``transaction()``'s fused rewrite; inside
+        a transaction the statement just records.
 
         ``deletion_vectors=True`` (or a table created with
         ``deletion_vectors=True``; explicit ``False`` overrides the
         table default) switches to MERGE-ON-READ: matched positions
         are written as a small dataset and the touched files are
         re-committed with a ``dv`` mask instead of being rewritten —
-        see ``_mor_statement``. On the DV path ``range_hint`` changes
+        see ``_mor_statement``; its conflict set is every candidate
+        bucket the scan read. On the DV path ``range_hint`` changes
         meaning: it prunes the scan's CANDIDATE FILES by footer stats,
         so a hint that is NOT a true superset of where the matching
         rows lie silently leaves rows undeleted (on the rewrite plans
@@ -3887,101 +3785,21 @@ class TxnTable:
         the semantics far from the call site — the DV path REFUSES a
         ``range_hint`` unless the caller affirms it with
         ``trusted_range_hint=True`` (ADVICE r13). ``rewrite_all`` is
-        ignored on the DV path. Inside ``transaction()`` statements
-        always fuse into the copy-on-write rewrite (an explicit
-        ``deletion_vectors=True`` there raises — a fused plan has no
-        per-statement mask)."""
-        if self._txn is not None:
-            if deletion_vectors:
-                raise ValueError(
-                    "deletion_vectors=True is not a transaction "
-                    "statement option — transaction() fuses statements "
-                    "into one copy-on-write rewrite; run the DV "
-                    "statement standalone"
-                )
-            ra = self._resolve_rewrite_all(
-                rewrite_all, range_hint, self._txn.active, self._txn.meta
-            )
-            self._txn.stmts.append(("delete_where", cond, ra))
-            return self._txn.read_v
-        meta, active, read_v = self._state()
-        if not active:
-            return read_v
-        use_dv = (
-            deletion_vectors
-            if deletion_vectors is not None
-            else bool(meta.get("dv_default"))
-        )
-        if use_dv:
+        ignored on the DV path."""
+
+        def record(st: _TxnState) -> None:
+            ra = self._resolve_rewrite_all(rewrite_all, range_hint, st.active, st.meta)
+            st.stmts.append(("delete_where", cond, ra))
+
+        def dv(meta: dict, active: dict, read_v: int) -> int:
+            if not active:
+                return read_v
             self._check_dv_hint(range_hint, trusted_range_hint, "delete_where")
             return self._mor_statement(
                 meta, active, read_v, cond, None, range_hint, "delete"
             )
-        rewrite_all = self._resolve_rewrite_all(
-            rewrite_all, range_hint, active, meta
-        )
-        schema = self._schema(meta)
-        bucket_expr = F.pmod(
-            F.xxhash64(*meta["keys"]), F.lit(meta["n_buckets"])
-        )
-        keep_pred = ~F.coalesce(cond, F.lit(False))
-        if rewrite_all:
-            from pyspark.sql import Observation
 
-            obs = Observation()
-            kept = (
-                self._read_entries(meta, self._active_items(active))
-                .withColumn(_BUCKET, bucket_expr)
-                .observe(
-                    obs,
-                    F.collect_set(
-                        F.when(F.coalesce(cond, F.lit(False)), F.col(_BUCKET))
-                    ).alias("hit_buckets"),
-                )
-                .filter(keep_pred)
-                .drop(_BUCKET)
-            )
-            adds_all = self._write_data(
-                kept, meta, shuffle=len(active) > 32, validate=False
-            )
-            touched = sorted(int(b) for b in (obs.get["hit_buckets"] or []))
-            keep_set = set(touched)
-            if not touched:  # no matches anywhere: discard the rewrite
-                if adds_all:
-                    shutil.rmtree(
-                        os.path.join(
-                            self.path, os.path.dirname(adds_all[0]["path"])
-                        ),
-                        ignore_errors=True,
-                    )
-                return read_v
-            for a in adds_all:
-                if a["bucket"] not in keep_set:
-                    shutil.rmtree(
-                        os.path.join(self.path, a["path"]), ignore_errors=True
-                    )
-            adds = [a for a in adds_all if a["bucket"] in keep_set]
-            removes = [
-                p for p, a in active.items() if a["bucket"] in keep_set
-            ]
-            return self._commit("delete", adds, removes, touched, read_v)
-        # discovery straight off the known active file set — no second
-        # log replay via snapshot() (r13, same fix as update_where)
-        hit = (
-            self._read_entries(meta, self._active_items(active))
-            .filter(cond)
-            .withColumn(_BUCKET, bucket_expr)
-        )
-        touched = sorted(r[_BUCKET] for r in hit.select(_BUCKET).distinct().collect())
-        if not touched:
-            return read_v
-        base_items = self._active_items(active, set(touched))
-        kept = self._read_entries(meta, base_items).filter(keep_pred)
-        adds = self._write_data(
-            kept, meta, shuffle=len(base_items) > 32, validate=False
-        )
-        removes = [p for p, a in active.items() if a["bucket"] in set(touched)]
-        return self._commit("delete", adds, removes, touched, read_v)
+        return self._statement("delete", deletion_vectors, record, dv)
 
     def _check_update_sets(self, set_exprs: dict, meta: dict) -> dict:
         """Validate an ``update_where`` SET map: known non-key columns,
@@ -4087,14 +3905,12 @@ class TxnTable:
         type. Keys cannot be updated (a key change under hash
         bucketing is a delete+insert — ``delete_keys`` + ``merge``).
 
-        Same two plans and automatic choice as ``delete_where``
-        (two-phase discovery → touched-bucket rewrite, or single-pass
-        with ``observe()``-collected hit buckets; ``range_hint`` feeds
-        the footer-stats crossover rule). Inside ``transaction()`` the
-        statement records and fuses into the single rewrite like any
-        other. CDC: ``row_changes`` reads the commit as update
-        pre/post image pairs; ``scd2_history`` folds them in as value
-        versions.
+        Same two plans, automatic choice and whole-table conflict set
+        as ``delete_where`` (two-phase discovery → touched-bucket
+        rewrite, or single-pass with ``observe()``-collected hit
+        buckets; ``range_hint`` feeds the footer-stats crossover rule).
+        CDC: ``row_changes`` reads the commit as update pre/post image
+        pairs; ``scd2_history`` folds them in as value versions.
 
         CHECK constraints re-validate updated rows' NEW images in-plan
         (guard folded into the kept updated column); carried rows are
@@ -4110,109 +3926,23 @@ class TxnTable:
         skip matching rows (a correctness input, unlike the plan-only
         role above) — the DV path refuses ``range_hint`` without
         ``trusted_range_hint=True`` (ADVICE r13, same contract as
-        ``delete_where``). Inside ``transaction()`` an explicit
-        ``deletion_vectors=True`` raises (statements fuse into the
-        copy-on-write rewrite)."""
-        if self._txn is not None:
-            if deletion_vectors:
-                raise ValueError(
-                    "deletion_vectors=True is not a transaction "
-                    "statement option — transaction() fuses statements "
-                    "into one copy-on-write rewrite; run the DV "
-                    "statement standalone"
-                )
-            news = self._check_update_sets(set_exprs, self._txn.meta)
-            ra = self._resolve_rewrite_all(
-                rewrite_all, range_hint, self._txn.active, self._txn.meta
-            )
-            self._txn.stmts.append(("update_where", cond, news, ra))
-            return self._txn.read_v
-        # ONE log replay per statement (review): the SET probe reuses the
-        # same state the write plans against
-        meta, active, read_v = self._state()
-        news = self._check_update_sets(set_exprs, meta)
-        if not active:
-            return read_v
-        use_dv = (
-            deletion_vectors
-            if deletion_vectors is not None
-            else bool(meta.get("dv_default"))
-        )
-        if use_dv:
+        ``delete_where``)."""
+
+        def record(st: _TxnState) -> None:
+            news = self._check_update_sets(set_exprs, st.meta)
+            ra = self._resolve_rewrite_all(rewrite_all, range_hint, st.active, st.meta)
+            st.stmts.append(("update_where", cond, news, ra))
+
+        def dv(meta: dict, active: dict, read_v: int) -> int:
+            news = self._check_update_sets(set_exprs, meta)
+            if not active:
+                return read_v
             self._check_dv_hint(range_hint, trusted_range_hint, "update_where")
             return self._mor_statement(
                 meta, active, read_v, cond, news, range_hint, "update"
             )
-        rewrite_all = self._resolve_rewrite_all(
-            rewrite_all, range_hint, active, meta
-        )
-        schema = self._schema(meta)
-        bucket_expr = F.pmod(
-            F.xxhash64(*meta["keys"]), F.lit(meta["n_buckets"])
-        )
-        if rewrite_all:
-            from pyspark.sql import Observation
 
-            obs = Observation()
-            out = (
-                self._read_entries(meta, self._active_items(active))
-                .withColumn(_BUCKET, bucket_expr)
-                .observe(
-                    obs,
-                    F.collect_set(
-                        F.when(F.coalesce(cond, F.lit(False)), F.col(_BUCKET))
-                    ).alias("hit_buckets"),
-                )
-            )
-            out = self._apply_update(out, cond, news, meta).drop(_BUCKET)
-            adds_all = self._write_data(
-                out, meta, shuffle=len(active) > 32, validate=False
-            )
-            touched = sorted(int(b) for b in (obs.get["hit_buckets"] or []))
-            keep_set = set(touched)
-            if not touched:  # no matches anywhere: discard the rewrite
-                if adds_all:
-                    shutil.rmtree(
-                        os.path.join(
-                            self.path, os.path.dirname(adds_all[0]["path"])
-                        ),
-                        ignore_errors=True,
-                    )
-                return read_v
-            for a in adds_all:
-                if a["bucket"] not in keep_set:
-                    shutil.rmtree(
-                        os.path.join(self.path, a["path"]), ignore_errors=True
-                    )
-            adds = [a for a in adds_all if a["bucket"] in keep_set]
-            removes = [
-                p for p, a in active.items() if a["bucket"] in keep_set
-            ]
-            return self._commit("update", adds, removes, touched, read_v)
-        # discovery straight off the known active file set — no second
-        # log replay via snapshot() (review)
-        hit = (
-            self._read_entries(meta, self._active_items(active))
-            .filter(cond)
-            .withColumn(_BUCKET, bucket_expr)
-        )
-        touched = sorted(
-            r[_BUCKET] for r in hit.select(_BUCKET).distinct().collect()
-        )
-        if not touched:
-            return read_v
-        base_items = self._active_items(active, set(touched))
-        out = self._apply_update(
-            self._read_entries(meta, base_items),
-            cond,
-            news,
-            meta,
-        )
-        adds = self._write_data(
-            out, meta, shuffle=len(base_items) > 32, validate=False
-        )
-        removes = [p for p, a in active.items() if a["bucket"] in set(touched)]
-        return self._commit("update", adds, removes, touched, read_v)
+        return self._statement("update", deletion_vectors, record, dv)
 
     def update_from(
         self,
@@ -4327,39 +4057,36 @@ class TxnTable:
         )
 
     def _stage_keys(self, keys_df: DataFrame, meta: dict) -> tuple[str, list[int]]:
-        """Stage a deduplicated key list once (same pattern as merge's
-        ``_stage_updates``): touched buckets ride an ``observe()`` on the
-        staging write, and the anti-join build side is a cheap parquet
-        re-read instead of a second evaluation of the caller's key
-        plan."""
-        from pyspark.sql import Observation
-
+        """Stage a deduplicated key list once (``_stage``): the anti-join
+        build side is then a cheap parquet re-read (``_staged_keys``)
+        instead of a second evaluation of the caller's key plan."""
         keys = meta["keys"]
-        kd = keys_df.select(*keys).dropDuplicates(list(keys)).withColumn(
-            _BUCKET, F.pmod(F.xxhash64(*keys), F.lit(meta["n_buckets"]))
+        return self._stage(
+            keys_df.select(*keys)
+            .dropDuplicates(list(keys))
+            .withColumn(_BUCKET, F.pmod(F.xxhash64(*keys), F.lit(meta["n_buckets"])))
         )
-        rel = os.path.join(_STAGING_DIR, uuid.uuid4().hex)
-        out = os.path.join(self.path, rel)
-        os.makedirs(os.path.join(self.path, _STAGING_DIR), exist_ok=True)
-        obs = Observation()
-        try:
-            kd.observe(
-                obs, F.collect_set(F.col(_BUCKET)).alias("touched")
-            ).write.parquet(out)
-        except BaseException:
-            shutil.rmtree(out, ignore_errors=True)  # failed staging job
-            raise
-        _write_inflight_marker(out)  # cross-process vacuum guard (r12)
-        return rel, sorted(int(b) for b in obs.get["touched"])
+
+    def _staged_keys(self, meta: dict, rel: str) -> DataFrame:
+        """The key columns of a ``_stage_keys`` dir."""
+        schema = self._schema(meta)
+        key_schema = StructType(
+            [schema[k] for k in meta["keys"]] + [StructField(_BUCKET, LongType())]
+        )
+        return (
+            self.spark.read.schema(key_schema)
+            .parquet(os.path.join(self.path, rel))
+            .drop(_BUCKET)
+        )
 
     def delete_keys(
         self, keys_df: DataFrame, deletion_vectors: bool | None = None
     ) -> int:
         """DELETE by key LIST (the takedown/GDPR primitive — and the
-        pipeline's validation-deletion sink): buckets containing any of
-        the given keys are rewritten without those rows, everything else
-        carries over by reference. One shuffle on the key, bounded by
-        touched-bucket bytes, like merge.
+        pipeline's validation-deletion sink): the key list is staged
+        once, and buckets containing any of the given keys are
+        rewritten without those rows; everything else carries over by
+        reference. The conflict set is the key buckets.
 
         ``deletion_vectors=True`` (or the table default; explicit
         ``False`` overrides) runs MERGE-ON-READ instead: the matching
@@ -4372,45 +4099,19 @@ class TxnTable:
         rewrite of their buckets (merge/compact/rebucket). For
         contractual physical erasure deadlines, follow with
         ``compact()`` + ``vacuum()`` — same as Delta's documented
-        DV-era GDPR procedure. Inside ``transaction()`` statements
-        fuse into the copy-on-write rewrite (explicit True raises)."""
-        if self._txn is not None:
-            if deletion_vectors:
-                raise ValueError(
-                    "deletion_vectors=True is not a transaction "
-                    "statement option — transaction() fuses statements "
-                    "into one copy-on-write rewrite; run the DV "
-                    "statement standalone"
-                )
-            st = self._txn
+        DV-era GDPR procedure."""
+
+        def record(st: _TxnState) -> None:
             rel, touched = self._stage_keys(keys_df, st.meta)
             st.staging.append(rel)
-            _INFLIGHT_STAGING.add(os.path.join(self.path, rel))
             if touched:
                 st.stmts.append(("delete_keys", rel, touched))
-            return st.read_v
-        meta, active, read_v = self._state()
-        keys = meta["keys"]
-        schema = self._schema(meta)
-        use_dv = (
-            deletion_vectors
-            if deletion_vectors is not None
-            else bool(meta.get("dv_default"))
-        )
-        rel, touched = self._stage_keys(keys_df, meta)
-        out = os.path.join(self.path, rel)
-        _INFLIGHT_STAGING.add(out)
-        os.utime(out)  # rewrite reads it next: freshen for vacuum (r11)
-        try:
-            if not touched:
-                return read_v
-            key_schema = StructType(
-                [schema[k] for k in keys] + [StructField(_BUCKET, LongType())]
-            )
-            staged_kd = (
-                self.spark.read.schema(key_schema).parquet(out).drop(_BUCKET)
-            )  # _BUCKET is a stored column in the staged files
-            if use_dv:
+
+        def dv(meta: dict, active: dict, read_v: int) -> int:
+            rel, touched = self._stage_keys(keys_df, meta)
+            try:
+                if not touched:
+                    return read_v
                 return self._mor_statement(
                     meta,
                     active,
@@ -4419,25 +4120,13 @@ class TxnTable:
                     None,
                     None,
                     "delete",
-                    semi=staged_kd,
+                    semi=self._staged_keys(meta, rel),
                     buckets=set(touched),
                 )
-            base_items = self._active_items(active, set(touched))
-            if not base_items:
-                return read_v
-            kept = self._read_entries(meta, base_items).join(
-                staged_kd, list(keys), "left_anti"
-            )
-            adds = self._write_data(
-                kept, meta, shuffle=len(base_items) > 32, validate=False
-            )
-            removes = [
-                p for p, a in active.items() if a["bucket"] in set(touched)
-            ]
-            return self._commit("delete", adds, removes, touched, read_v)
-        finally:
-            _INFLIGHT_STAGING.discard(out)
-            shutil.rmtree(out, ignore_errors=True)
+            finally:
+                self._drop_staging([rel])
+
+        return self._statement("delete", deletion_vectors, record, dv)
 
     def coalesce_masks(self, min_chain: int = 2) -> int:
         """Merge chained deletion-vector position dirs into ONE per

@@ -866,6 +866,30 @@ def test_conditional_put_backend_contention(spark, tmp_path):
     assert vs == sorted(set(vs))
 
 
+def test_standalone_statement_keeps_its_transaction_private(spark, table):
+    """Threads may share a handle (test_conditional_put_backend_contention
+    races three merges on one): a standalone statement's one-statement
+    transaction must never be published as the handle's open
+    transaction, or a concurrent statement would record into it."""
+    table.append(_df(spark, [(1, "a", 1)]))
+    seen = []
+    for name in ("_stage_updates", "_stage_keys"):
+        real = getattr(table, name)
+
+        def spy(*a, _real=real, **k):
+            seen.append(table._txn)
+            return _real(*a, **k)
+
+        setattr(table, name, spy)
+    try:
+        table.merge(_df(spark, [(1, "b", 2)]), ["version"])
+        table.delete_keys(spark.createDataFrame([(1,)], "id long"))
+    finally:
+        del table._stage_updates, table._stage_keys
+    assert seen == [None, None]
+    assert _rows(table.snapshot()) == set()
+
+
 def test_zorder_buckets_prune_files_on_second_column(spark, tmp_path):
     """VERDICT r8 #8: zorder_cols clusters WITHIN buckets — a bucket's
     write splits into curve-segment files whose per-file footer stats
@@ -1294,18 +1318,65 @@ def test_transaction_delete_only_and_exactly_once_stamp(spark, table):
     assert table.streaming_watermark("appA") == 7
 
 
-def test_transaction_two_phase_delete_conflicts_on_read_set(spark, table):
-    """r11 review: a PREDICATE delete's discovery scan reads every
-    bucket, so even the two-phase (non-rewrite_all) transaction must
-    conflict with a concurrent commit on a bucket it did not rewrite."""
-    table.append(_df(spark, [(i, "x", 1) for i in range(8)]))
-    with pytest.raises(ConcurrentWriteError):
+def _bucket_of(spark, key: int, n_buckets: int = 4) -> int:
+    return (
+        spark.createDataFrame([(key,)], "id long")
+        .select(F.pmod(F.xxhash64("id"), F.lit(n_buckets)).alias("b"))
+        .collect()[0]
+        .b
+    )
+
+
+@pytest.mark.parametrize(
+    "mode", ["transaction", "standalone", "update_where", "deletion_vectors"]
+)
+def test_transaction_two_phase_delete_conflicts_on_read_set(spark, table, mode):
+    """r11 review: a PREDICATE statement's discovery scan reads every
+    bucket, so even the two-phase (non-rewrite_all) plan must conflict
+    with a concurrent commit on a bucket it did not rewrite — inside
+    ``transaction()``, as a standalone statement (a one-statement
+    transaction), as a standalone ``update_where``, and on the
+    deletion-vector path (whose conflict set is the scanned candidate
+    set). The racer inserts a MATCHING row: rebasing past it would
+    leave that row untouched under a log that reads racer-then-delete."""
+    rows = [(i, "x", 1) for i in range(8)]
+    rows[0] = (0, "bad", 1)
+    table.append(_df(spark, rows))
+    hit = _bucket_of(spark, 0)
+    occupied = {_bucket_of(spark, i) for i in range(1, 8)} - {hit}
+    racer_id = next(i for i in range(100, 200) if _bucket_of(spark, i) in occupied)
+    bad = F.col("val") == "bad"
+
+    def in_transaction():
         with table.transaction():
-            table.delete_where(F.col("id") == 0)  # two-phase, hits ≤1 bucket
+            table.delete_where(bad)  # two-phase, hits 1 bucket
+
+    statement = {
+        "transaction": in_transaction,
+        "standalone": lambda: table.delete_where(bad),
+        "update_where": lambda: table.update_where(bad, {"val": F.lit("fixed")}),
+        "deletion_vectors": lambda: table.delete_where(bad, deletion_vectors=True),
+    }[mode]
+    raced = []
+    real_state = table._state
+
+    def racing_state(*a, **k):
+        out = real_state(*a, **k)
+        if not raced:  # the racer commits right after the statement's read
+            raced.append(True)
             TxnTable(spark, table.path).merge(
-                _df(spark, [(7, "z", 2)]), ["version"]
+                _df(spark, [(racer_id, "bad", 2)]), ["version"]
             )
-    assert (7, "z", 2) in _rows(table.snapshot())
+        return out
+
+    table._state = racing_state
+    try:
+        with pytest.raises(ConcurrentWriteError):
+            statement()
+    finally:
+        del table._state
+    assert raced
+    assert _rows(table.snapshot()) == set(rows) | {(racer_id, "bad", 2)}
     assert os.listdir(os.path.join(table.path, "_staging")) == []
 
 
@@ -1336,14 +1407,16 @@ def test_delete_keys_clears_inflight_registry(spark, table):
     assert _rows(table.snapshot()) == {(2, "b", 1)}
 
 
-def test_transaction_job_count_is_stage_plus_one_rewrite(spark, table):
+def test_transaction_job_count_is_stage_plus_one_rewrite(spark, table, tmp_path):
     """The fused-commit cost claim (SCALE.md r11): a merge + rewrite_all
     delete transaction runs exactly TWO actions — the update staging
     write and the single fused rewrite (the delete adds no scan of its
     own); the two-phase predicate delete adds exactly one discovery
-    job. AQE is disabled for the count (it materializes each query
-    stage as its own job id, which is sub-action scheduling, not an
-    extra pass over the data)."""
+    job. Standalone statements are one-statement transactions and keep
+    their own cost shapes (pinned below, including the merge into an
+    empty table, which reads no base files). AQE is disabled for the
+    count (it materializes each query stage as its own job id, which is
+    sub-action scheduling, not an extra pass over the data)."""
     table.append(_df(spark, [(i, "x", 1) for i in range(12)]))
     sc = spark.sparkContext
 
@@ -1370,6 +1443,40 @@ def test_transaction_job_count_is_stage_plus_one_rewrite(spark, table):
 
     assert jobs_in("txn-ra", ra_txn) == 2
     assert jobs_in("txn-2p", two_phase_txn) == 3
+
+    empty = TxnTable.create(
+        spark, str(tmp_path / "empty"), keys=["id"], schema=SCHEMA, n_buckets=4
+    )
+    v0 = table.version()
+    standalone = {
+        "merge_empty_table": lambda: empty.merge(
+            _df(spark, [(1, "a", 1)]), ["version"]
+        ),
+        "merge": lambda: table.merge(_df(spark, [(3, "m", 2)]), ["version"]),
+        "delete_keys": lambda: table.delete_keys(
+            spark.createDataFrame([(4,)], "id long")
+        ),
+        "delete_where_two_phase": lambda: table.delete_where(F.col("id") == 7),
+        "delete_where_rewrite_all": lambda: table.delete_where(
+            F.col("id") == 8, rewrite_all=True
+        ),
+        "update_where": lambda: table.update_where(
+            F.col("id") == 9, {"val": F.lit("u")}
+        ),
+    }
+    got = {name: jobs_in(f"std-{name}", fn) for name, fn in standalone.items()}
+    # counts measured on the standalone rewrite bodies this path
+    # replaced: staging + rewrite (delete_keys' anti-join adds one job
+    # for its staged key side), discovery + rewrite, one single pass
+    assert got == {
+        "merge_empty_table": 2,
+        "merge": 2,
+        "delete_keys": 3,
+        "delete_where_two_phase": 2,
+        "delete_where_rewrite_all": 1,
+        "update_where": 2,
+    }
+    assert table.version() == v0 + 5 and empty.version() == 1
 
 
 def test_transaction_fuses_consecutive_merges(spark, table):
